@@ -284,12 +284,10 @@ object Bench {
             -1.0
         }
       spark.catalog.clearCache()
+      // also forgets the driver-side memos (IVF centroids, corpus
+      // counts), which would otherwise survive into the next trial and
+      // record training-free times for the ANN family
       Caches.clear()
-      // driver-side memos (IVF centroids, corpus counts) are keyed on
-      // the data dir and would otherwise survive into the next trial,
-      // recording training-free times for the ANN family (the
-      // round-13 verdict's gaming finding) — purge with the caches
-      SparkEntry.clearSessionMemos()
       sc.getPersistentRDDs.filterNot { case (id, _) => before(id) }
         .values.foreach(_.unpersist(blocking = false))
       // runs=1 scale probes only: compact the heap BETWEEN queries

@@ -1,36 +1,40 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** Registry for persisted INTERNAL intermediates — frames an operator
-  * persists for its own multi-branch reuse (a tf frame read by both
-  * the df side and the join side, a bucketed event frame feeding two
-  * aggregates) but never returns, so callers could not release them.
-  * Bench and Runner already do scoped per-query release at the RDD
-  * level; this is the release point for everything else — a
-  * long-lived host session (a notebook, a Runner-less service) calls
-  * [[clear]] between pipelines instead of letting cache pins
-  * accumulate until a global `spark.catalog.clearCache()` nukes the
-  * host's own frames too.
+/** The one registry for state graft keeps across calls in a session:
   *
-  * Frames the CALLER owns (returned persisted frames like the
-  * memoized affinity pair frames) are deliberately not here — see
-  * [[graft.operators.Affinity.clearCache]] for that family.
+  *  - [[hold]]: persisted INTERNAL intermediates — frames an operator
+  *    persists for its own multi-branch reuse (a tf frame read by both
+  *    the df side and the join side, the affinity degree frames) but
+  *    never returns, so callers could not release them;
+  *  - [[memo]]: build-once shared frames, the one-artifact-many-consumers
+  *    intermediates (the span family's seed frame, the affinity pair
+  *    frames);
+  *  - [[value]]: build-once driver-side values (the IVF corpus count,
+  *    the Lloyd-trained centroid rows).
+  *
+  * [[clear]] is the one release call for all three. Runner, Bench and
+  * DevProbe call it between runs or trials; a long-lived host session
+  * (a notebook, a Runner-less service) calls it between pipelines
+  * instead of letting cache pins accumulate until a global
+  * `spark.catalog.clearCache()` drops the host's own frames too.
   */
 object Caches {
 
   private val held = scala.collection.mutable.ListBuffer[DataFrame]()
 
-  /** Memoized shared intermediates, keyed by (session, input plan,
-    * builder tag) — the one-artifact-many-consumers frames (e.g. the
-    * span family's tokenize+hash seed frame, read by spanDedup,
-    * spanStrip AND seedNovelty: without the memo a curation pipeline
-    * running all three pays three full corpus scans for one logical
-    * artifact). An entry whose buffers were dropped by external
+  /** Memoized shared frames, keyed by (session, input plan, builder
+    * tag). Without the memo a curation pipeline running spanDedup,
+    * spanStrip and seedNovelty pays three full corpus scans for one
+    * logical artifact. An entry whose buffers were dropped by external
     * scoped cleanup (Bench/Runner) re-persists on lookup. */
   private val memoMap =
     scala.collection.mutable.Map[(Int, Int, String), DataFrame]()
+
+  /** Memoized driver-side values, keyed by (session, tag). */
+  private val values = scala.collection.mutable.Map[(Int, String), Any]()
 
   /** Persist `df` (MEMORY_AND_DISK) and track it for [[clear]]. */
   def hold(df: DataFrame): DataFrame = synchronized {
@@ -39,51 +43,40 @@ object Caches {
     p
   }
 
-  /** Extra tracked-frame sources (modules with their own memo, e.g.
-    * [[graft.operators.Affinity]]) — consulted by [[tracked]] so the
-    * Runner's shared-artifact exemption sees every graft-persisted
-    * frame. Lock order is always Caches → provider; providers must
-    * not call back into Caches while holding their own lock. */
-  private val providers =
-    scala.collection.mutable.ListBuffer[() => Seq[DataFrame]]()
-
-  def registerProvider(p: () => Seq[DataFrame]): Unit =
-    synchronized { providers += p }
-
-  /** Every frame currently tracked by this registry or a registered
-    * provider — the set [[Runner]] treats as RUN-scoped (skipped by
-    * per-query cleanup, released at end of run). */
+  /** Every frame currently tracked — the set [[Runner]] treats as
+    * RUN-scoped (skipped by per-query cleanup, released at end of
+    * run). */
   def tracked: Seq[DataFrame] = synchronized {
     (held ++ memoMap.values).toSeq
-  } ++ synchronized(providers.toList).flatMap(p =>
-    try p() catch { case scala.util.control.NonFatal(_) => Nil })
-
-  /** How many internal frames are currently tracked (diagnostics). */
-  def heldCount: Int = synchronized(held.size)
+  }
 
   /** Build-once lookup for a shared persisted intermediate: the first
     * call per (session, `input` plan, `kind`) persists `build`'s
-    * result; later calls return the SAME frame, re-registering it if
-    * an external scoped cleanup dropped its buffers. Released (and
-    * forgotten) by [[clear]]. */
+    * result (a builder may persist and materialize it itself, to
+    * release its own intermediates at once); later calls return the
+    * SAME frame, re-registering it if an external scoped cleanup
+    * dropped its buffers. Released (and forgotten) by [[clear]]. */
   def memo(input: DataFrame, kind: String)
           (build: => DataFrame): DataFrame = synchronized {
     val key = (System.identityHashCode(input.sparkSession),
       input.queryExecution.analyzed.semanticHash(), kind)
-    memoMap.get(key) match {
-      case Some(df) =>
-        if (df.storageLevel == StorageLevel.NONE)
-          df.persist(StorageLevel.MEMORY_AND_DISK)
-        df
-      case None =>
-        val df = build.persist(StorageLevel.MEMORY_AND_DISK)
-        memoMap(key) = df
-        df
-    }
+    val df = memoMap.getOrElseUpdate(key, build)
+    if (df.storageLevel == StorageLevel.NONE)
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+    else df
   }
 
-  /** Release every tracked internal frame. Safe mid-session: a frame
-    * released while its query is still lazy just recomputes. */
+  /** Build-once lookup for a driver-side value per (session, `key`).
+    * Forgotten by [[clear]], so the next lookup rebuilds it. */
+  def value[T](spark: SparkSession, key: String)(build: => T): T =
+    synchronized {
+      values.getOrElseUpdate((System.identityHashCode(spark), key), build)
+        .asInstanceOf[T]
+    }
+
+  /** Release every tracked frame and forget every memoized value.
+    * Safe mid-session: a frame released while its query is still lazy
+    * just recomputes. */
   def clear(): Unit = synchronized {
     (held ++ memoMap.values).foreach { df =>
       try df.unpersist(blocking = false)
@@ -91,5 +84,6 @@ object Caches {
     }
     held.clear()
     memoMap.clear()
+    values.clear()
   }
 }

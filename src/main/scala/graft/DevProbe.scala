@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** Scratch dev main — per-query stage-metric decomposition, not part
-  * of the library. Usage: DevProbe <query names...> with
-  * SPARK_GRAFT_SF_DIR; each query runs twice (cold + warm) with
-  * per-stage wall/cpu/gc/spill/shuffle breakdowns. */
+/** Dev probe, not part of the library. Usage: DevProbe <query
+  * names...> with SPARK_GRAFT_SF_DIR; each query prints its formatted
+  * physical plan, then runs twice (cold + warm) with per-stage
+  * wall/cpu/gc/spill/shuffle breakdowns. */
 object DevProbe {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.local()
@@ -30,10 +30,9 @@ object DevProbe {
     })
     def clear(): Unit = {
       spark.catalog.clearCache()
-      Caches.clear()
       // same trial hygiene as Bench.runOnce: the warm run must pay
       // its own ANN training, or the probe measures the memo
-      SparkEntry.clearSessionMemos()
+      Caches.clear()
       sc.getPersistentRDDs.values.foreach(_.unpersist(true))
     }
     def time1(label: String, detail: Boolean)(f: => DataFrame): Unit = {
@@ -46,7 +45,9 @@ object DevProbe {
     }
     args.foreach { q =>
       val fn = SparkEntry.queries(q)
-      time1(s"$q cold", detail = false)(fn(spark, dir))
+      val cold = fn(spark, dir)
+      cold.explain("formatted")
+      time1(s"$q cold", detail = false)(cold)
       time1(s"$q warm", detail = true)(fn(spark, dir))
     }
     spark.stop()

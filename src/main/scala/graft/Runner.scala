@@ -37,6 +37,11 @@ import org.apache.spark.sql.SparkSession
   * hit "already cached" as a no-op and recompute the chain once per
   * consumer with nothing stored.
   *
+  * The one exception is [[Caches]], graft's one registry for state
+  * kept across calls: its tracked frames are RUN-scoped, kept past
+  * each query and released, with its memoized values, by the single
+  * [[Caches.clear]] at the end of [[runAll]].
+  *
   * The snapshot-diff is SINGLE-FLIGHT: it assumes nothing else
   * persists on this session while a query runs. A host thread that
   * caches a frame mid-query would postdate the snapshots and be
@@ -216,13 +221,11 @@ object Runner {
         catch { case NonFatal(e) => s"FAILED: $e" }
       name -> status
     }
-    // the RUN-scoped shared artifacts runOne kept alive across
-    // queries (seed frames, pair frames) end their lifetime with the
-    // run — a host that wants them warm across runs re-pays one build
-    try {
-      Caches.clear()
-      operators.Affinity.clearCache()
-    } catch { case NonFatal(_) => () }
+    // the RUN-scoped shared state runOne kept alive across queries
+    // (seed frames, pair frames, trained centroids) ends its lifetime
+    // with the run — a host that wants it warm across runs re-pays
+    // one build
+    try Caches.clear() catch { case NonFatal(_) => () }
     statuses
   }
 

@@ -588,12 +588,10 @@ object SparkEntry {
     * the fixed ÷50 stride this replaces grew cells linearly and
     * assignment quadratically, 12–21× at the 10× sf1 probe). The
     * corpus count is one cheap parquet metadata action, memoized per
-    * data dir; the oracles replay round(sqrt(count(*))) off the same
+    * session and data dir in [[Caches]]; the oracles replay round(sqrt(count(*))) off the same
     * table. */
-  private val embCountMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
   private def embCount(emb: DataFrame, d: String): Long =
-    embCountMemo.getOrElseUpdate(d, emb.count())
+    Caches.value(emb.sparkSession, s"embCount:$d")(emb.count())
   private def annSeeds(emb: DataFrame, d: String): DataFrame = {
     val stride = VectorSearch.centroidStrideFor(embCount(emb, d))
     emb.where(col("vec_id") % stride === 0)
@@ -619,10 +617,10 @@ object SparkEntry {
     * the result is summation-order-independent and the DuckDB oracle
     * replays the identical refinement via [[TrainedCtrCtes]]).
     *
-    * Trained ONCE PER SESSION per data dir and memoized as collected
-    * rows (√n centroids × 64 floats — ~115 KB at the 100× probe's
-    * 200k vectors; still ~8 MB at 10⁹, and the frame is broadcast
-    * downstream anyway): eight query keys rank against these
+    * Trained ONCE PER SESSION per data dir and memoized in [[Caches]]
+    * as collected rows (√n centroids × 64 floats — ~115 KB at the 100×
+    * probe's 200k vectors; still ~8 MB at 10⁹, and the frame is
+    * broadcast downstream anyway): eight query keys rank against these
     * centroids, and retraining inside every plan re-paid the Lloyd
     * corpus pass eight times per marathon — the round-12 verdict
     * named exactly that inline re-training as the one real gap in
@@ -634,31 +632,16 @@ object SparkEntry {
     * cross-session path a deployment uses), same discipline as the
     * [[embCount]] metadata memo. The rebuilt frame is a fresh local
     * relation per call, so Bench's between-run cache hygiene
-    * (unpersist/clearCache) never touches shared state. */
-  private val annCentroidsMemo = scala.collection.concurrent.TrieMap
-    .empty[String, (Array[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType)]
+    * (unpersist/clearCache) never touches shared state; [[Caches.clear]]
+    * forgets the rows, so every Bench trial pays its own training. */
   private def annCentroids(emb: DataFrame, d: String): DataFrame = {
-    val (rows, schema) = annCentroidsMemo.getOrElseUpdate(d, {
+    val (rows, schema) = Caches.value(emb.sparkSession, s"annCentroids:$d") {
       val t = VectorSearch.trainCentroids(emb, annSeeds(emb, d), LloydIters)
         .select(col("centroid_id").as("vec_id"), col("embedding"))
       (t.collect(), t.schema)
-    })
+    }
     emb.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows: _*), schema)
-  }
-
-  /** Drop the per-data-dir session memos ([[embCountMemo]],
-    * [[annCentroidsMemo]]). Bench calls this in its between-trial
-    * hygiene block so every timed trial pays its own Lloyd training
-    * and corpus count — a memo that survived the purge would let
-    * min-of-2 record training-free ANN trials, which measures the
-    * memo, not the engine. The deployment story for "index built
-    * once" is the published [[graft.operators.AnnIndex]] catalog
-    * serve, not this in-session cache. */
-  def clearSessionMemos(): Unit = {
-    embCountMemo.clear()
-    annCentroidsMemo.clear()
   }
 
   /** q_mixture: per-source target weights (unlisted sources weight 1)

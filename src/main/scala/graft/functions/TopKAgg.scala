@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.types._
 
 /** Exact bounded-heap top-k per group: `graft_topk(score, id, k)` →
@@ -37,11 +37,13 @@ case class TopKAgg(scoreExpr: Expression, idExpr: Expression,
   /** Heap order puts the WORST kept entry at the head so it can be
     * evicted in O(log k): "greater" = worse = lower score, then higher
     * id. Sorting ASCENDING under this same ordering therefore yields
-    * best-first — reused in [[eval]]. */
+    * best-first — reused in [[eval]]. Scores compare in Spark SQL's
+    * double order (NaN above every number, -0.0 equal to 0.0), the
+    * order of the `ORDER BY score DESC, id` window this replaces. */
   private val worstFirst: Ordering[(Double, Long)] =
     new Ordering[(Double, Long)] {
       override def compare(a: (Double, Long), b: (Double, Long)): Int = {
-        val c = java.lang.Double.compare(b._1, a._1)
+        val c = SQLOrderingUtil.compareDoubles(b._1, a._1)
         if (c != 0) c else java.lang.Long.compare(a._2, b._2)
       }
     }
@@ -71,7 +73,7 @@ case class TopKAgg(scoreExpr: Expression, idExpr: Expression,
 
   /** True when a beats b under (score desc, id asc). */
   private def beats(a: (Double, Long), b: (Double, Long)): Boolean =
-    a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
+    worstFirst.compare(a, b) < 0
 
   private def offer(buf: mutable.PriorityQueue[(Double, Long)],
                     e: (Double, Long)): Unit =

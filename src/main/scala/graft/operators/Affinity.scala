@@ -40,64 +40,10 @@ import org.apache.spark.storage.StorageLevel
   */
 object Affinity {
 
-  /** Memoized shared pair frames, keyed by (session, input plan,
-    * builder). Running several affinity queries in one session used
-    * to build and persist an independent copy of the same pair frame
-    * per operator; the memo hands every operator the SAME persisted
-    * frame. Entries whose cache was dropped externally (Bench/Runner
-    * do scoped per-query release) re-persist on lookup — the plan is
-    * identical, only the materialization is redone. [[clearCache]] is
-    * the caller-side release for ALL frames this module persists,
-    * internal intermediates included. */
-  private val memo =
-    scala.collection.mutable.Map[(Int, Int, String), DataFrame]()
-
-  /** Internal persisted intermediates (e.g. the triangle orientation
-    * frame) that are not returned to the caller — released by
-    * [[clearCache]] so a long-lived session can reclaim them. */
-  private val held = scala.collection.mutable.ListBuffer[DataFrame]()
-
-  // visible to the Runner's run-scoped shared-artifact exemption
-  graft.Caches.registerProvider(() =>
-    synchronized((memo.values ++ held).toSeq))
-
-  private def hold(df: DataFrame): DataFrame = synchronized {
-    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    held += p
-    p
-  }
-
-  private def memoized(input: DataFrame, kind: String)
-                      (build: => DataFrame): DataFrame = synchronized {
-    val key = (System.identityHashCode(input.sparkSession),
-      input.queryExecution.analyzed.semanticHash(), kind)
-    memo.get(key) match {
-      case Some(df) =>
-        // external scoped cleanup (Bench, Runner) may have dropped the
-        // buffers; re-register so in-query reuse stays cached
-        if (df.storageLevel == StorageLevel.NONE)
-          df.persist(StorageLevel.MEMORY_AND_DISK)
-        df
-      case None =>
-        // the builder persists (and may eagerly materialize, so its
-        // own intermediates can be released immediately)
-        val df = build
-        memo(key) = df
-        df
-    }
-  }
-
-  /** Release every frame this module has persisted (memoized pair
-    * frames and internal intermediates). Safe to call mid-session;
-    * subsequent operator calls rebuild what they need. */
-  def clearCache(): Unit = synchronized {
-    (memo.values ++ held).foreach { df =>
-      try df.unpersist(blocking = false)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    memo.clear()
-    held.clear()
-  }
+  /** Alias of [[graft.Caches.clear]], the one release call for every
+    * frame this module persists (memoized pair frames and internal
+    * intermediates alike). Kept for callers written against it. */
+  def clearCache(): Unit = graft.Caches.clear()
 
   /** Distinct (order, item) memberships — an order listing an item on
     * several lines counts once, as a set membership. */
@@ -111,9 +57,9 @@ object Affinity {
     * join), so the exploded pairs carry (n_a, n_b) with them and the
     * pair grain never joins anything afterwards.
     *
-    * The RESULT is persisted and MEMOIZED (released via
-    * [[clearCache]]): [[itemSimilarity]] immediately unions the frame
-    * with its own swap, and without the persist each union branch
+    * The RESULT is persisted and MEMOIZED in [[graft.Caches]]:
+    * [[itemSimilarity]] immediately unions the frame with its own
+    * swap, and without the persist each union branch
     * re-runs the whole distinct→join→sets→explode chain — measured 3×
     * the operator's total cost at sf0.1 — while the memo hands
     * [[triangleStats]]/[[wedgeRecommendations]]/[[itemSimilarity]]
@@ -122,7 +68,7 @@ object Affinity {
     * once instead of pinning storage for the session. (The graph
     * operators use the leaner count-free [[coPairs]] instead.) */
   def coPurchasePairs(lineitem: DataFrame): DataFrame =
-    memoized(lineitem, "coPurchasePairs") {
+    graft.Caches.memo(lineitem, "coPurchasePairs") {
       val op = orderParts(lineitem)
         .persist(StorageLevel.MEMORY_AND_DISK)
       val cnt = op.groupBy(col("part")).agg(count(lit(1)).as("cnt"))
@@ -159,9 +105,8 @@ object Affinity {
       .unionAll(pairs.select(col("part_b").as("part"),
         col("part_a").as("other"), col("cooc"),
         col("n_b").as("n_a"), col("n_a").as("n_b")))
-    // persisted via hold(): the graft_topk cut and the count-recovery
-    // join both read it; released by [[clearCache]]
-    val scored = hold(sym
+    // held: the graft_topk cut and the count-recovery join both read it
+    val scored = graft.Caches.hold(sym
       .withColumn("cos_sim", col("cooc").cast("double") /
         sqrt(col("n_a").cast("double") * col("n_b"))))
     val top = scored.groupBy(col("part"))
@@ -193,10 +138,10 @@ object Affinity {
     * both drop out — one shuffle from the raw line stream to
     * per-order sets, one to the distinct pair grain (measured ~40%
     * off [[pageRank]]'s setup at sf0.1). Persisted and memoized
-    * ([[graphStats]] and [[pageRank]] share one copy); released via
-    * [[clearCache]]. */
+    * in [[graft.Caches]] ([[graphStats]] and [[pageRank]] share one
+    * copy). */
   def coPairs(lineitem: DataFrame): DataFrame =
-    memoized(lineitem, "coPairs") {
+    graft.Caches.memo(lineitem, "coPairs") {
       val sets = lineitem
         .select(col("l_orderkey").as("okey"), col("l_partkey").as("part"))
         .groupBy(col("okey"))
@@ -209,7 +154,6 @@ object Affinity {
         .select(explode(call_function("graft_pairs", col("ps"))).as("p"))
         .select(col("p.a").as("part_a"), col("p.b").as("part_b"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Degree distribution + size QA of the co-purchase graph — the
@@ -273,7 +217,7 @@ object Affinity {
     val pairs = coPurchasePairs(lineitem)
       .where(col("cooc") >= minSupport)
       .select(col("part_a"), col("part_b"))
-    val deg = hold(pairs
+    val deg = graft.Caches.hold(pairs
       .select(explode(array(col("part_a"), col("part_b"))).as("u"))
       .groupBy(col("u")).agg(count(lit(1)).as("deg")))
     val nodes = deg.agg(count(lit(1)).as("n_nodes"))
@@ -329,13 +273,13 @@ object Affinity {
       .select(col("part_a"), col("part_b"))
     val edges = pairs.unionAll(
       pairs.select(col("part_b"), col("part_a"))).toDF("src", "dst")
-    val deg = hold(edges.groupBy(col("src")).agg(count(lit(1)).as("deg")))
+    val deg = graft.Caches.hold(edges.groupBy(col("src")).agg(count(lit(1)).as("deg")))
     val withDeg = pairs
       .join(deg.select(col("src").as("part_a"), col("deg").as("da")),
         "part_a")
       .join(deg.select(col("src").as("part_b"), col("deg").as("db")),
         "part_b")
-    val oriented = hold(withDeg.select(
+    val oriented = graft.Caches.hold(withDeg.select(
       when(col("da") < col("db") ||
         (col("da") === col("db") && col("part_a") < col("part_b")),
         struct(col("part_a").as("u"), col("part_b").as("v")))
@@ -418,7 +362,7 @@ object Affinity {
       .agg(count(lit(1)).as("c")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     val support = wedgeSupportFor(hist, minSupportFloor, edgeBudget)
-    val pairs = hold(all
+    val pairs = graft.Caches.hold(all
       .where(col("cooc") >= support)
       .select(col("part_a"), col("part_b")))
     val edges = pairs.unionAll(
@@ -464,9 +408,9 @@ object Affinity {
     // frame re-exchanged every round (3 extra shuffles of the node
     // frame per query).
     val p = lineitem.sparkSession.sessionState.conf.numShufflePartitions
-    val edgesDeg = hold(edges.join(deg, "src")
+    val edgesDeg = graft.Caches.hold(edges.join(deg, "src")
       .repartition(p, col("src")))
-    val nodes = hold(deg.select(col("src").as("node"))
+    val nodes = graft.Caches.hold(deg.select(col("src").as("node"))
       .repartition(p, col("node")))
     // materialize BOTH caches before planning iteration 1: an
     // un-materialized AQE-planned cache reports unknown partitioning

@@ -291,41 +291,31 @@ object VectorSearch extends Logging {
   }
 
   /** Deterministic centroid assignment: nearest centroid by cosine
-    * (min centroid_id on ties). Centroids are broadcast; the argmax
-    * runs as a `graft_topk(…, 1)` bounded-heap aggregate over a SLIM
-    * (vec_id, centroid_id, ccos) projection of the broadcast-nested-
-    * loop expansion — the embedding arrays are dropped BEFORE the
-    * aggregate and joined back by vec_id afterwards.
+    * (min centroid_id on ties). The centroid frame is collected into a
+    * plan-time table, and the argmax runs as ONE native row-local
+    * expression, `graft_cell_argmax` ([[graft.functions.CellArgmax]]),
+    * over each vector: no fan-out rows, no aggregate, no join, nothing
+    * shuffled.
     *
-    * Why not max_by/first: both are declarative aggregates whose
-    * buffers hold a struct/array, and Spark's HashAggregate cannot
-    * host complex-typed declarative buffers — the planner silently
-    * falls back to SortAggregate, which SORTS the corpus × centroids
-    * pair frame (with the arrays riding along) on both sides of the
-    * exchange. The round-9 100× probe measured that fallback at 297 s
-    * for a 200k × 448 assignment; the typed-imperative topk heap
-    * (ObjectHashAggregate, map-side combined, same (cos DESC, id ASC)
-    * tiebreak) plus one AQE-sized vec_id join measures ~20 s on the
-    * same data. All candidate rows for a vector sit in one map
-    * partition, so partials collapse to one row per vector before the
-    * only corpus-keyed exchange; the pair frame is never shuffled and
-    * never sorted. */
+    * Contract: zero-norm vectors and centroids are excluded (their
+    * cosine is undefined); the winner is the highest cosine under
+    * Spark's double order, ties to the lower centroid_id — the same
+    * pick as `graft_topk(ccos, centroid_id, 1)` or the DuckDB oracle's
+    * `row_number() OVER (ORDER BY ccos DESC, centroid_id)`, so the
+    * result does not depend on the centroid table's order. */
   def assignCells(embeddings: DataFrame, centroids: DataFrame): DataFrame = {
     // zero-norm vectors/centroids have no defined cosine (NULL here,
     // inf/NaN in IEEE engines) — exclude them from the index rather
     // than let engine-specific null/NaN ordering pick their cells
     val e = withNorm(embeddings).where(col("nrm") =!= 0.0)
-    // The argmax runs as ONE native row-local expression over a
-    // plan-time centroid table ([[graft.functions.CellArgmax]] — the
-    // SrpBandSigs reference-object pattern): the previous broadcast
-    // cross join fanned every vector to |centroids| rows, paid a topk
-    // hash aggregate over that √n-times-corpus fan-out, then re-joined
-    // the corpus to itself to recover the embedding — measured ~80 s
-    // CPU per assignment stage at the 100× probe, twice per trained
-    // ANN query. Collecting the centroid frame here moves the same
-    // √n-sized rows the broadcast shipped anyway (≈8 MB at 10⁹
-    // vectors); at stream-serve time the centroids are the published
-    // (bounded) index table, same contract.
+    // the previous broadcast cross join fanned every vector to
+    // |centroids| rows, paid a topk hash aggregate over that
+    // √n-times-corpus fan-out, then re-joined the corpus to itself to
+    // recover the embedding — measured ~80 s CPU per assignment stage
+    // at the 100× probe, twice per trained ANN query. Collecting the
+    // centroid frame moves the same √n-sized rows the broadcast
+    // shipped anyway (≈8 MB at 10⁹ vectors); at stream-serve time the
+    // centroids are the published (bounded) index table, same contract.
     val cRows = withNorm(centroids).where(col("nrm") =!= 0.0)
       .select(col("vec_id"), col("embedding"), col("nrm")).collect()
     if (cRows.isEmpty) {
@@ -1022,10 +1012,8 @@ object VectorSearch extends Logging {
 
   /** PQ encoding: every vector of `vecs` (plus any rider columns in
     * `keep`) as its m per-subspace nearest codebook entries — one
-    * pass, broadcast codebook, m min_by argmins collapsed map-side.
-    * Self-dots are hoisted out of the pair frame: dot(a,a) is
-    * constant per corpus row and dot(b,b) per codebook row, so the
-    * pair-grain work is ONE fused m-subspace cross-dot per row. */
+    * row-local `graft_pq_codes` pass over a plan-time codebook (L2²
+    * asc under Spark's double order, lower centroid_id on ties). */
   private def pqCodes(vecs: DataFrame, cb: DataFrame, keep: Seq[String],
                       m: Int, subLen: Int): DataFrame = {
     val keyCols = ("vec_id" +: keep).map(col)

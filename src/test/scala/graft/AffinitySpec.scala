@@ -167,6 +167,6 @@ class AffinitySpec extends SparkSpec {
       .collect().head
     assert(r.getLong(0) == 4L && r.getLong(1) == 3L)
     assert(r.getDouble(2) == -1.0)
-    Affinity.clearCache()
+    Caches.clear()
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.storage.StorageLevel
 
 class CachesSpec extends SparkSpec {
@@ -12,12 +13,12 @@ class CachesSpec extends SparkSpec {
     a.count(); b.count()
     assert(a.storageLevel == StorageLevel.MEMORY_AND_DISK)
     assert(b.storageLevel == StorageLevel.MEMORY_AND_DISK)
-    assert(Caches.heldCount == 2)
+    assert(Caches.tracked.size == 2)
     // an untracked caller-persisted frame must survive the clear
     val mine = Seq(9).toDF("z").persist(StorageLevel.MEMORY_AND_DISK)
     mine.count()
     Caches.clear()
-    assert(Caches.heldCount == 0)
+    assert(Caches.tracked.isEmpty)
     assert(a.storageLevel == StorageLevel.NONE)
     assert(b.storageLevel == StorageLevel.NONE)
     assert(mine.storageLevel == StorageLevel.MEMORY_AND_DISK)
@@ -71,6 +72,55 @@ class CachesSpec extends SparkSpec {
     NearDup.seedNovelty(planted, 8).count()
     assert(Caches.tracked.size == trackedBefore,
       "strip/novelty registered extra seed frames instead of sharing")
+    Caches.clear()
+  }
+
+  /** Spark jobs launched on this thread while `build` constructs (not
+    * runs) a frame. A marker job follows the build; listener events
+    * arrive in order, so once the marker is seen every build job is. */
+  private def jobsDuring(build: => Any): Int = {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      def inGroup(g: String)(body: => Any): Unit = {
+        sc.setJobGroup(g, g)
+        try body finally sc.clearJobGroup()
+      }
+      inGroup("caches-spec-build")(build)
+      inGroup("caches-spec-marker")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!groups.contains("caches-spec-marker") &&
+        System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains("caches-spec-marker"), "marker job never seen")
+      groups.toArray.count(_ == "caches-spec-build")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("clear() alone releases the affinity frames and the IVF driver memos") {
+    val dir = sf("lineitem")
+    Caches.clear()
+    assert(SparkEntry.queries("q_item_similarity")(spark, dir).count() > 0)
+    // the memo hands back the pair frame q_item_similarity built
+    val pairs = operators.Affinity.coPurchasePairs(Tables.lineitem(spark, dir))
+    assert(Caches.tracked.exists(_ eq pairs), "pair frame not memoized")
+    assert(pairs.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    assert(SparkEntry.queries("q_ann_ivf")(spark, dir).count() > 0)
+    // a warm build reads the memoized corpus count and centroids; its
+    // remaining jobs are the per-build centroid-table collect
+    val warm = jobsDuring(SparkEntry.queries("q_ann_ivf")(spark, dir))
+    Caches.clear()
+    assert(Caches.tracked.isEmpty)
+    assert(pairs.storageLevel == StorageLevel.NONE)
+    val cold = jobsDuring(SparkEntry.queries("q_ann_ivf")(spark, dir))
+    assert(cold > warm,
+      s"the IVF centroids survived Caches.clear(): $cold jobs vs $warm warm")
     Caches.clear()
   }
 }

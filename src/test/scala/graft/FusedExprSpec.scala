@@ -196,6 +196,20 @@ class FusedExprSpec extends SparkSpec {
     assert(graft.functions.Pairs.compute(small, LongType).numElements() == 3)
   }
 
+  test("graft_hamming_pairs refuses more than Int.MaxValue survivors instead of a negative array") {
+    // 65537 equal sketches all survive at distance 0: 2 147 516 416
+    // pairs, one past Int.MaxValue — an Int count wraps negative
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    val same = new GenericArrayData(Array.tabulate[Any](65537)(i =>
+      InternalRow(i.toLong, 0L)))
+    val e = intercept[IllegalArgumentException] {
+      graft.functions.HammingPairs.compute(same, 0)
+    }
+    assert(e.getMessage.contains("graft_hamming_pairs") &&
+      e.getMessage.contains("Int.MaxValue"), e.getMessage)
+  }
+
   test("int-literal builder args accept bigint literals and foldables") {
     import spark.implicits._
     val df = Seq(Seq((1L, 0L), (2L, 3L))).toDF("ids")
@@ -236,5 +250,143 @@ class FusedExprSpec extends SparkSpec {
     // prefix stability: plane i identical whatever the total
     assert(graft.operators.VectorSearch.srpPlanes(16, 64).map(_.toSeq) ==
       graft.operators.VectorSearch.srpPlanes(64, 64).take(16).map(_.toSeq))
+  }
+
+  // ---- plan-time-table kernels: raced against the broadcast fan-out
+  // forms they replaced, on inputs the corpus never produces (ties,
+  // unsorted table ids, NaN). Spark orders NaN above every number, so
+  // a NaN cosine wins the argmax and a NaN distance loses the argmin.
+
+  private val floats = ArrayType(FloatType, containsNull = false)
+
+  private def frame(idCol: String, vecCol: String,
+                    rows: Seq[(Long, Seq[Float])]): org.apache.spark.sql.DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(rows.map { case (i, v) => Row(i, v) }: _*),
+      StructType(Seq(StructField(idCol, LongType, nullable = false),
+        StructField(vecCol, floats, nullable = false))))
+
+  /** vec_id (first column) -> the remaining bigint columns. */
+  private def byVecId(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] =
+    df.collect().map(r => r.getLong(0) ->
+      (1 until r.length).map(r.getLong)).toMap
+
+  /** vec_id -> cell from graft_cell_argmax, the graft_topk(ccos, id, 1)
+    * heap over the cross join, and the ORDER BY ccos DESC, id window;
+    * asserts all three agree and returns the answer. */
+  private def raceCellArgmax(vecs: Seq[(Long, Seq[Float])],
+                             cents: Seq[(Long, Seq[Float])]): Map[Long, Long] = {
+    import org.apache.spark.sql.GraftExpressionBridge
+    import org.apache.spark.sql.expressions.Window
+    import graft.operators.VectorSearch.{cosine, norm}
+    val e = frame("vec_id", "embedding", vecs)
+      .withColumn("nrm", norm(col("embedding")))
+    val c = frame("centroid_id", "ce", cents).withColumn("cn", norm(col("ce")))
+    val cRows = c.collect()
+    val native = e.select(col("vec_id"),
+      GraftExpressionBridge.column(graft.functions.CellArgmax(
+        GraftExpressionBridge.expression(col("embedding")),
+        GraftExpressionBridge.expression(col("nrm")),
+        cRows.map(_.getLong(0)), cRows.map(_.getSeq[Float](1).toArray),
+        cRows.map(_.getDouble(2)))))
+    val fan = e.crossJoin(broadcast(c)).select(col("vec_id"),
+      col("centroid_id"),
+      cosine(col("embedding"), col("ce"), col("nrm"), col("cn")).as("ccos"))
+    val heap = fan.groupBy(col("vec_id"))
+      .agg(expr("graft_topk(ccos, centroid_id, 1)")(0)("id"))
+    val window = fan
+      .withColumn("rk", row_number().over(Window.partitionBy(col("vec_id"))
+        .orderBy(desc("ccos"), asc("centroid_id"))))
+      .where(col("rk") === 1).select(col("vec_id"), col("centroid_id"))
+    val want = byVecId(window)
+    assert(byVecId(native) == want, "graft_cell_argmax vs window")
+    assert(byVecId(heap) == want, "graft_topk vs window")
+    want.map { case (v, cs) => v -> cs.head }
+  }
+
+  /** vec_id -> m codes from graft_pq_codes and from the cross join's
+    * min_by(centroid_id, struct(d_j, centroid_id)); asserts they agree
+    * and returns the answer. */
+  private def racePqCodes(vecs: Seq[(Long, Seq[Float])],
+                          cb: Seq[(Long, Seq[Float])],
+                          m: Int, subLen: Int): Map[Long, Seq[Long]] = {
+    import org.apache.spark.sql.GraftExpressionBridge
+    def sub(a: Column, b: Column): Column =
+      call_function("graft_pq_subdots", a, b, lit(m), lit(subLen))
+    val e = frame("vec_id", "embedding", vecs)
+    val c = frame("centroid_id", "ce", cb)
+    val cRows = c.collect()
+    val codes = GraftExpressionBridge.column(graft.functions.PqCodebookCodes(
+      GraftExpressionBridge.expression(col("embedding")),
+      cRows.map(_.getLong(0)), cRows.map(_.getSeq[Float](1).toArray),
+      m, subLen))
+    val native = e.select(col("vec_id") +:
+      (0 until m).map(j => element_at(codes, j + 1)): _*)
+    val d = e.withColumn("eself", sub(col("embedding"), col("embedding")))
+      .crossJoin(broadcast(c.withColumn("cself", sub(col("ce"), col("ce")))))
+      .withColumn("xd", sub(col("embedding"), col("ce")))
+      .select(col("vec_id") +: col("centroid_id") +: (0 until m).map(j =>
+        (element_at(col("eself"), j + 1) + element_at(col("cself"), j + 1) -
+          lit(2.0) * element_at(col("xd"), j + 1)).as(s"d$j")): _*)
+    val composed = d.groupBy(col("vec_id")).agg(
+      min_by(col("centroid_id"), struct(col("d0"), col("centroid_id"))),
+      (1 until m).map(j =>
+        min_by(col("centroid_id"), struct(col(s"d$j"), col("centroid_id")))): _*)
+    val want = byVecId(composed)
+    assert(byVecId(native) == want, "graft_pq_codes vs min_by")
+    want
+  }
+
+  private def randomVecs(seed: Int, ids: Seq[Long], dim: Int): Seq[(Long, Seq[Float])] = {
+    val rnd = new scala.util.Random(seed)
+    ids.map(i => i -> Seq.fill(dim)(rnd.nextFloat() * 2 - 1))
+  }
+
+  test("graft_cell_argmax equals the graft_topk and window argmax on finite inputs") {
+    val vecs = randomVecs(11, 0L until 40L, 16)
+    // unsorted ids, and centroid 2 duplicates centroid 6: exact ties
+    // must go to the lower id whatever the table order
+    val cents0 = randomVecs(12, Seq(5L, 1L, 6L, 0L, 3L), 16)
+    val cents = cents0 :+ (2L -> cents0(2)._2)
+    val got = raceCellArgmax(vecs, cents)
+    assert(got.size == vecs.size && !got.values.exists(_ == 6L))
+  }
+
+  test("graft_cell_argmax ranks a NaN cosine first, in the first or a later centroid") {
+    val vecs = randomVecs(21, 0L until 10L, 8)
+    val nan = Seq.fill(8)(Float.NaN)
+    val finite = randomVecs(22, Seq(4L, 0L), 8)
+    // NaN in the first and second table entries: a NaN-NaN tie goes to
+    // the lower id (2), not to the first one scanned (7)
+    assert(raceCellArgmax(vecs, (7L -> nan) +: (2L -> nan) +: finite)
+      .values.toSet == Set(2L))
+    // NaN in a later entry still beats every finite cosine
+    assert(raceCellArgmax(vecs, finite :+ (9L -> nan)).values.toSet == Set(9L))
+  }
+
+  test("graft_pq_codes equals the min_by argmin on finite inputs") {
+    val m = 4; val subLen = 4
+    val vecs = randomVecs(31, 0L until 40L, 16) ++
+      randomVecs(32, Seq(40L, 41L), 9)  // short vectors: slice clamps
+    // unsorted ids, and entry 1 duplicates entry 8: exact ties
+    val cb0 = randomVecs(33, Seq(8L, 3L, 5L, 0L), 16)
+    val got = racePqCodes(vecs, cb0 :+ (1L -> cb0.head._2), m, subLen)
+    assert(got.size == vecs.size && !got.values.exists(_.contains(8L)))
+  }
+
+  test("graft_pq_codes ranks a NaN distance last, in the first or a later entry") {
+    val m = 2; val subLen = 4
+    val vecs = randomVecs(41, 0L until 10L, 8)
+    val nanSub0 = Seq.fill(4)(Float.NaN) ++ Seq.fill(4)(0.5f)
+    val finite = randomVecs(42, Seq(6L, 1L), 8)
+    // NaN in subspace 0 of the first entry: never the code there
+    val first = racePqCodes(vecs, (3L -> nanSub0) +: finite, m, subLen)
+    assert(!first.values.exists(_.head == 3L))
+    // NaN in a later entry, plus a vector whose subspace 1 is NaN:
+    // every entry ties at NaN there, and the tie goes to the lower id
+    val nanVec = 99L -> (Seq.fill(4)(0.25f) ++ Seq.fill(4)(Float.NaN))
+    val later = racePqCodes(vecs :+ nanVec, finite :+ (3L -> nanSub0), m, subLen)
+    assert(!later.values.exists(_.head == 3L))
+    assert(later(99L)(1) == 1L)
   }
 }

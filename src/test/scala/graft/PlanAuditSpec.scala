@@ -40,16 +40,32 @@ class PlanAuditSpec extends SparkSpec {
     assert(!plan("q_value_mapping").contains("Window"))
   }
 
-  test("IVF assignment is aggregate-based; only the query top-k windows") {
+  /** The operator subtree under the first plan line containing
+    * `marker` (the lines below it, indented deeper). */
+  private def subtree(p: String, marker: String): String = {
+    val lines = p.linesIterator.toVector
+    val at = lines.indexWhere(_.contains(marker))
+    assert(at >= 0, s"$marker not in plan: ${p.take(3000)}")
+    def indent(l: String) = l.indexWhere(c => c.isLetter)
+    val d = indent(lines(at))
+    lines.drop(at + 1).takeWhile(indent(_) > d).mkString("\n")
+  }
+
+  /** The assignment is the row-local graft_cell_argmax projection:
+    * nothing but scan, filter and project feeds it — no corpus ×
+    * centroids join, no fan-out aggregate, no shuffle. */
+  private def assertRowLocalAssignment(p: String): Unit = {
+    val feed = subtree(p, "graft_cell_argmax")
+    Seq("Join", "CartesianProduct", "Aggregate", "Exchange", "Window")
+      .foreach(op => assert(!feed.contains(op), s"$op feeds the assignment:\n$feed"))
+    assert(feed.contains("FileScan parquet"), feed)
+  }
+
+  test("IVF assignment is the row-local graft_cell_argmax; only the query top-k windows") {
     val p = plan("q_ann_ivf")
-    // graft_topk (typed-imperative) — NOT max_by/first, whose complex
-    // declarative buffers force a SortAggregate that sorts the
-    // corpus × centroids frame (round-9 sf10 probe: 297 s vs 20 s)
-    assert(p.contains("graft_topk"), p.take(2000))
-    assert(!"SortAggregate.*graft_topk".r.findFirstIn(p).isDefined,
-      p.take(2000))
+    assertRowLocalAssignment(p)
     // exactly one Window chain (rank over query_id) — the assignment
-    // no longer windows the corpus x centroids expansion
+    // never windows the corpus
     assert("(?<!Group)Window(?!GroupLimit)".r.findAllIn(p).size == 1, p.take(2000))
   }
 
@@ -735,7 +751,7 @@ class PlanAuditSpec extends SparkSpec {
     val p = plan("q_assortativity")
     assert("InMemoryTableScan".r.findAllIn(p).size >= 2, p.take(3000))
     assert(!p.contains("CartesianProduct"), p.take(2000))
-    graft.operators.Affinity.clearCache()
+    Caches.clear()
   }
 
   test("fisher index: all four weighted legs read the cached panel") {
@@ -847,15 +863,22 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin"), p.take(3000))
   }
 
-  test("lloyd-trained IVF keeps the graft_topk assignment in training") {
-    // the trained-centroid chain adds a SECOND assignment pass (the
-    // Lloyd step) — BOTH must stay on the typed-imperative topk heap;
-    // a max_by/first regression in either silently re-plans the
-    // corpus × centroids frame through a SortAggregate
-    val p = plan("q_ann_recall_curve")
-    assert("graft_topk".r.findAllIn(p).size >= 2, p.take(3000))
-    assert(!"SortAggregate.*graft_topk".r.findFirstIn(p).isDefined,
-      p.take(3000))
+  test("lloyd-trained IVF keeps the graft_cell_argmax assignment in training") {
+    // the trained-centroid chain has TWO assignment passes: the query's
+    // corpus assignment, and the Lloyd step. The Lloyd step runs and
+    // is checkpointed when the centroids are trained at plan-build
+    // time, so it is audited as trainCentroids runs it: assignCells
+    // over the stride seeds. Both must stay row-local; a regression
+    // to the broadcast fan-out re-plans the corpus × centroids frame
+    // through an aggregate
+    import org.apache.spark.sql.functions.col
+    import graft.operators.VectorSearch
+    assertRowLocalAssignment(plan("q_ann_recall_curve"))
+    val emb = Tables.embeddings(spark, sf("embeddings"))
+    val seeds = emb.where(
+      col("vec_id") % VectorSearch.centroidStrideFor(emb.count()) === 0)
+    assertRowLocalAssignment(VectorSearch.assignCells(emb, seeds)
+      .queryExecution.executedPlan.toString)
   }
 
   test("probe cost: broadcast cells join, query-partitioned window") {

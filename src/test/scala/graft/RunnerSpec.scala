@@ -75,7 +75,6 @@ class RunnerSpec extends SparkSpec {
     val out = Files.createTempDirectory("graft-runner-shared").toString
     val sfDir = "/root/testdata/sf0.001"
     Caches.clear()
-    operators.Affinity.clearCache()
     val beforeIds = spark.sparkContext.getPersistentRDDs.keySet
     assert(Runner.runOne(spark, sfDir, out, "q_span_dedup", force = true)
       == "written")
